@@ -742,7 +742,7 @@ def _timed_scale_job(spark, docs, cfg, cores: int, n_docs: int) -> dict:
     reps = sketches.join(rep_ids, "doc_id", "left_semi").localCheckpoint(eager=True)
     cand, _metrics = _lsh.candidate_pairs(
         reps, band_doc_cap=cfg.lsh.band_doc_cap,
-        hard_bucket_cap=cfg.lsh.hard_bucket_cap, eager=True,
+        hard_bucket_cap=cfg.lsh.hard_bucket_cap,
     )
     n_cand = cand.count()
     wall = time.time() - t0

@@ -49,29 +49,6 @@ def capped_merge(a: np.ndarray, b: np.ndarray, sketch_size: int) -> tuple[int, i
     return common, denom
 
 
-def capped_merge_sorted(a: np.ndarray, b: np.ndarray, sketch_size: int) -> tuple[int, int]:
-    """``capped_merge`` specialized to already-sorted-distinct inputs
-    (sketch blobs are stored sorted ascending): a stable sort of the
-    concatenation detects the two pre-sorted runs (near-linear merge)
-    and adjacent-equality flags replace ``np.unique``'s full
-    sort+return_counts — same (common, denom), ~3x cheaper in the verify
-    hot path. Equality with ``capped_merge`` is asserted by tests."""
-    m = np.sort(np.concatenate([a, b]), kind="stable")
-    if len(m) == 0:
-        return 0, 0
-    dup = m[1:] == m[:-1]            # second copy of a value present in both
-    is_first = np.empty(len(m), dtype=bool)
-    is_first[0] = True
-    np.logical_not(dup, out=is_first[1:])
-    shared_next = np.empty(len(m), dtype=bool)
-    shared_next[:-1] = dup
-    shared_next[-1] = False
-    shared_flag = shared_next[is_first]  # per distinct union value, ascending
-    denom = min(sketch_size, len(shared_flag))
-    common = int(np.count_nonzero(shared_flag[:denom]))
-    return common, denom
-
-
 _PAD = np.iinfo(np.int64).max
 
 # Per-worker scratch pool for the batch-merge hot path. Arrow batches
@@ -115,8 +92,8 @@ def capped_merge_sorted_batch(arrs_a: list, arrs_b: list, sketch_size: int):
       ``!= _PAD`` value check.
 
     Rows containing the sentinel value itself (probability ~2**-64 per
-    hash) fall back to the scalar path, so results are bit-identical to
-    ``capped_merge_sorted``.
+    hash) fall back to the scalar oracle ``capped_merge``, so results are
+    bit-identical to it.
 
     Returns (common, denom) int32 arrays.
     """
@@ -168,23 +145,11 @@ def capped_merge_sorted_batch(arrs_a: list, arrs_b: list, sketch_size: int):
         from .hashing import decode_signed
 
         for i in np.flatnonzero(bad):
-            c, d = capped_merge_sorted(
+            c, d = capped_merge(
                 decode_signed(np.asarray(arrs_a[i], dtype=np.int64)),
                 decode_signed(np.asarray(arrs_b[i], dtype=np.int64)),
                 sketch_size)
             common[i], denom[i] = c, d
-    return common, denom
-
-
-def capped_merge_batch(sk_a: list, sk_b: list, sketch_size: int):
-    """Vectorized-ish batch of capped merges; returns (common, denom) int64 arrays."""
-    n = len(sk_a)
-    common = np.zeros(n, dtype=np.int64)
-    denom = np.zeros(n, dtype=np.int64)
-    for i in range(n):
-        c, d = capped_merge(sk_a[i], sk_b[i], sketch_size)
-        common[i] = c
-        denom[i] = d
     return common, denom
 
 

@@ -3,7 +3,7 @@
 Replaces the reference's all-pairs enumerator (``CommandDistance.cpp:195-237``
 blocks of <=4096 pairs per thread) with a banded join so only plausible
 pairs reach the Mash-exact verify pass. Band keys are computed in the
-sketch UDF (``sketch.compute_band_keys``).
+sketch stage (``sketch.batch_band_keys``).
 
 Skew strategy (north rule: explicit salting/repartitioning for
 boilerplate-heavy hot buckets):
@@ -103,8 +103,7 @@ def tune_lsh_params(threshold: float, s: int = 1000,
 
 
 def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
-                    hard_bucket_cap: int = 100_000, eager: bool = False,
-                    checkpoint: bool = True):
+                    hard_bucket_cap: int = 100_000):
     """Distinct candidate (id_a, id_b) pairs, id_a < id_b, plus skew metrics.
 
     Returns (pairs_df, metrics_df). metrics_df: one row —
@@ -112,24 +111,12 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     last counts band ENTRIES in dropped buckets, an upper bound on
     affected docs).
 
-    ``eager``/``checkpoint`` are RETAINED FOR API COMPATIBILITY but are
-    no-ops since round 6: earlier rounds eagerly localCheckpointed the
-    band relation and the bucket-size table to stop concurrent AQE
-    exchange-materialization jobs racing on a lazy checkpoint's lock
-    (a measured 17 s zero-CPU stall). Round-6 re-measure: with no
-    checkpoint there is no lock to race on, every consumer (sizes
-    groupBy, hot/cold anti+semi branches, the self-join's two sides)
-    sits in the ONE downstream plan where ReuseExchange shares the
-    band-key exchange, and the band explode itself is cheap JVM column
-    work hanging off the caller's materialized sketch relation — while
-    each eager checkpoint serialized a full extra scan job per run.
-    Interleaved fresh-JVM A/B on the pinned scale job, identical
-    candidate counts: 8 cores 11.8-14.5 s -> 10.6-13.0 s (and the
-    earlier sizes-checkpoint removal measured 14.9-16.2 -> 11.1-12.8);
-    2 cores 39.7-45.9 -> 35.0-38.9. Callers that collect ``metrics``
-    later re-run the cheap explode+groupBy — rare and off the hot path.
+    Nothing is checkpointed here: every consumer of the band relation
+    (sizes groupBy, hot/cold branches, the self-join's two sides) sits in
+    one downstream plan where ReuseExchange shares the band-key exchange.
+    Callers that collect ``metrics`` later re-run the cheap
+    explode+groupBy.
     """
-    del eager, checkpoint  # no-ops since round 6 (see docstring)
     bands = explode_bands(sketches)
 
     # bucket sizes via groupBy, NOT a window: groupBy does map-side

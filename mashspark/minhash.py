@@ -72,41 +72,3 @@ def sketch_text_bytes(data: bytes, k: int, s: int, seed: int,
     buf = np.frombuffer(data, dtype=np.uint8)
     h = hash_shingles_concat(buf, k, seed)
     return bottom_k(h, s, min_cov=min_cov, with_counts=with_counts)
-
-
-def sketch_batch(texts, k: int, s: int, seed: int, min_cov: int = 1):
-    """Sketch a batch of python/bytes strings with ONE murmur pass.
-
-    Concatenates all documents' UTF-8 bytes, hashes every sliding window of
-    the concatenation in a single vectorized call, then slices per-document
-    segments (windows that straddle a document boundary fall in the k-1
-    tail of each segment and are excluded by construction).
-
-    Returns list of (sketch uint64[<=s], n_kmers int, n_distinct_est int).
-    Documents shorter than k get an empty sketch (reference skips records
-    shorter than k, ``Sketch.cpp:337-341``).
-    """
-    bufs = []
-    lens = []
-    for t in texts:
-        b = t if isinstance(t, (bytes, bytearray)) else str(t).encode("utf-8")
-        bufs.append(np.frombuffer(bytes(b), dtype=np.uint8))
-        lens.append(len(b))
-    if not bufs:
-        return []
-    big = np.concatenate(bufs) if len(bufs) > 1 else bufs[0]
-    all_h = hash_shingles_concat(big, k, seed)
-
-    out = []
-    off = 0
-    n_windows = len(all_h)
-    for blen in lens:
-        if blen < k:
-            out.append((np.empty(0, dtype=np.uint64), 0, 0))
-        else:
-            nk = blen - k + 1
-            seg = all_h[off : off + nk] if off < n_windows else all_h[0:0]
-            sk = bottom_k(seg, s, min_cov=min_cov)
-            out.append((sk, nk, kmv_set_size(sk) if len(sk) >= s else len(sk)))
-        off += blen
-    return out

@@ -72,7 +72,7 @@ def exact_collapse(sketches: DataFrame) -> DataFrame:
     """(doc_id, rep_id): rep = min doc_id among docs with IDENTICAL sketch.
 
     Grouping key is the 128-bit sketch fingerprint (fp1, fp2) computed in
-    the sketch UDF — exact duplicates and exact sketch-collisions collapse
+    the sketch stage — exact duplicates and exact sketch-collisions collapse
     to one representative before LSH, removing mirrored/templated
     mega-buckets (skew source #1). Only (doc_id, fp1, fp2) crosses the
     shuffle (24 B/doc), not the 8 KB sketch array; 128 bits keeps the
@@ -107,10 +107,10 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     sp = config.sketch
     spark = docs.sparkSession
     # snapshot the persistent-RDD registry: every localCheckpoint created
-    # during this run (sketches, verify tier-1 survivors, pairs, AND
-    # lsh.candidate_pairs' internal band/size checkpoints) is new-in-span
-    # and gets released by DedupResult.release() — a plain unpersist() on
-    # the returned DataFrames would silently skip all of them.
+    # during this run (sketches, verify tier-1 survivors, pairs, CC
+    # rounds) is new-in-span and gets released by DedupResult.release() —
+    # a plain unpersist() on the returned DataFrames would silently skip
+    # all of them.
     _ids0 = _persistent_rdd_ids(spark)
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -144,7 +144,7 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     # exchange-materialization jobs concurrently and their tasks race to
     # compute the same checkpoint — the loser blocks on the RDD
     # checkpoint lock (measured: 17 s zero-CPU task stall in a 40 s
-    # 8-core run) and overlapping partitions compute the sketch UDF
+    # 8-core run) and overlapping partitions compute the sketch kernel
     # twice. One ordered materialization is strictly cheaper.
     sketches = sketches.localCheckpoint(eager=True)
     return _cluster_sketches(spark, sketches, config, _ids0)
@@ -155,7 +155,7 @@ def dedup_from_sketches(sketches: DataFrame,
     """Clustering stages (exact collapse -> LSH -> verify -> CC) over a
     PRE-BUILT sketch table — the resume path: a committed sketch
     snapshot (``runs.dedup_snapshot_run``, ``io.read_sketches``) feeds
-    clustering without re-running the sketch UDF. Param compatibility
+    clustering without re-running the sketch stage. Param compatibility
     (F6) is enforced against the table's embedded params when present."""
     config = config or PipelineConfig()
     from .params import params_from_schema
@@ -188,7 +188,6 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
         reps,
         band_doc_cap=config.lsh.band_doc_cap,
         hard_bucket_cap=config.lsh.hard_bucket_cap,
-        eager=True,
     )
     pairs = _verify.verify_pairs(
         cand,

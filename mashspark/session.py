@@ -10,6 +10,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.execution.arrow.maxRecordsPerBatch``: rows per Arrow batch
+#: handed to the sketch kernel and the pandas UDFs
+ARROW_BATCH_ROWS = 2048
+#: ``spark.task.cpus``: one slot per core (see ``get_spark``)
+TASK_CPUS = 1
+
 
 def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
               app_name: str = "mashspark", extra_conf: dict | None = None) -> SparkSession:
@@ -45,16 +51,10 @@ def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch rows: 1024 measured best for the round-2 pandas UDF
-        # path (large fresh allocations pay pathological first-touch
-        # page-fault costs). Round-6 re-measure with the mapInArrow
-        # sketch path + per-chunk kernels (scratch is reused, so batch
-        # size no longer drives fresh allocation): 2048 won 3 of 4
-        # interleaved fresh-JVM pairs on the pinned scale job (13.6-15.3s
-        # vs 14.5-17.4s), 4096 regressed. Weak-evidence knob; override
-        # via MASHSPARK_ARROW_BATCH.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("MASHSPARK_ARROW_BATCH", "2048"))
+        # Arrow batch rows: 2048 won 3 of 4 interleaved fresh-JVM pairs
+        # against 1024 on the pinned scale job with the mapInArrow sketch
+        # path (13.6-15.3s vs 14.5-17.4s); 4096 regressed
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.driver.memory", os.environ.get("MASHSPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -72,25 +72,12 @@ def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
         # between batches; 4 MB measured 25.5s->21.4s on the 4-core sketch
         # stage and +0.08 scaling efficiency
         .config("spark.buffer.size", str(4 * 1024 * 1024))
-        # task.cpus: round-3 measured 2 (JVM task thread + python worker
-        # each kept a core busy, so 1 oversubscribed 2x and thrashed —
-        # 38% faster wall at 2). Round-6 RE-measured after the u64 murmur
-        # kernel + mapInArrow sketch path cut the python stage CPU ~25%
-        # and the per-batch JVM conversion work far more: the JVM task
-        # thread now mostly WAITS on its python worker, so task.cpus=2
-        # idles ~40% of cores through the sketch stage (event-log: 3.9/4
-        # slots busy but only ~5/8 cores). Interleaved fresh-JVM A/B on
-        # the pinned scale job: 8 cores 16.6-18.2s (cpus=2) vs
-        # 14.5-14.8s (cpus=1); 12-core full pipeline 13.8-17.0 vs
-        # 13.2-13.3; identical outputs — and 2-vs-8-core efficiency
-        # improves (0.59 -> 0.71 in-session) because the wide leg gains
-        # most. The narrow 2-core leg alone is ~5% slower (2 workers + 2
-        # JVM threads share 2 cores); the wide legs and every bench
-        # session win. Production note: this tracks the python-worker
-        # duty cycle — re-measure per workload mix; override via
-        # MASHSPARK_TASK_CPUS (e.g. 2 for pandas-UDF-heavy jobs where
-        # the JVM conversion side stays hot).
-        .config("spark.task.cpus", os.environ.get("MASHSPARK_TASK_CPUS", "1"))
+        # task.cpus=1: the JVM task thread mostly WAITS on its python
+        # worker in the mapInArrow sketch stage, so 2 idled ~40% of cores
+        # (event log); interleaved fresh-JVM A/B on the pinned scale job:
+        # 8 cores 14.5-14.8s (cpus=1) vs 16.6-18.2s (cpus=2), identical
+        # outputs
+        .config("spark.task.cpus", str(TASK_CPUS))
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

@@ -1,11 +1,13 @@
 """Spark sketching stage: documents -> bottom-k sketches + LSH band keys.
 
-One vectorized Arrow/pandas UDF does normalize-free shingling, a SINGLE
-murmur3 pass over the whole batch's concatenated bytes, per-doc bottom-k
-distinct selection (Mash ``MinHashHeap`` semantics, see ``minhash.py``),
-the KMV cardinality estimate, and residue-class band keys — no per-row
-Python, no shuffle (map-only stage; this is why sketching scales linearly
-with executors, replacing the reference's thread pool at
+One Arrow batch kernel (``_sketch_kernel``, run through ``mapInArrow``)
+does normalize-free shingling, a SINGLE murmur3 pass over the whole
+batch's concatenated bytes, per-doc bottom-k distinct selection (Mash
+``MinHashHeap`` semantics, see ``minhash.py``) and the KMV cardinality
+estimate; ``sketch_documents`` adds residue-class band keys and the
+fp128 fingerprint on top, ``sketch_documents_with_counts`` the per-hash
+multiplicities. No shuffle (map-only stage; this is why sketching scales
+linearly with executors, replacing the reference's thread pool at
 ``Sketch.cpp:211,354``).
 
 Sketch hashes are stored sign-flip-encoded int64 (``hashing.encode_signed``)
@@ -14,11 +16,12 @@ so Spark-native ordering equals Mash's unsigned ordering.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StructField, StructType)
 
@@ -103,7 +106,7 @@ def batch_band_keys(sketches: list, bands: int, prefix: int | None):
     """``compute_band_keys`` for a whole batch of sketches with ONE stable
     argsort + reduceat over the concatenation (group key = doc*bands +
     residue class) instead of ~10 small numpy calls per document — the
-    per-doc calls were half the sketch UDF's CPU. Bit-identical outputs
+    per-doc calls were half the sketch kernel's CPU. Bit-identical outputs
     (asserted by tests). Returns a list of int64 arrays."""
     n_docs = len(sketches)
     pres = [
@@ -162,130 +165,17 @@ def batch_fp128(sketches: list):
     return fp1, fp2
 
 
-def make_sketch_udf(params: SketchParams, lsh: LSHParams):
-    k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-    bands, prefix = lsh.bands, lsh.prefix
-
-    @pandas_udf(SKETCH_FIELDS)
-    def sketch_udf(texts: pd.Series) -> pd.DataFrame:
-        vals = texts.fillna("").astype(str).tolist()
-        bufs = [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for t in vals]
-        lens = [len(b) for b in bufs]
-        big = np.concatenate(bufs) if bufs else np.empty(0, dtype=np.uint8)
-        all_h = hash_shingles_concat(big, k, seed)
-
-        n_rows = len(lens)
-        raw_sketches, sketches = [], []
-        n_kmers = np.zeros(n_rows, dtype=np.int64)
-        cards = np.zeros(n_rows, dtype=np.int64)
-        off = 0
-        for i, blen in enumerate(lens):
-            if blen < k:
-                sk = np.empty(0, dtype=np.uint64)
-                nk = 0
-            else:
-                nk = blen - k + 1
-                sk = bottom_k(all_h[off : off + nk], s, min_cov=min_cov)
-            off += blen
-            n_kmers[i] = nk
-            cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-            raw_sketches.append(sk)
-            sketches.append(encode_signed(sk).tobytes())  # int64 IS <i8 here (LE asserted)
-        bkeys = batch_band_keys(raw_sketches, bands, prefix)
-        fp1, fp2 = batch_fp128(raw_sketches)
-        return pd.DataFrame(
-            {
-                "sketch": sketches,
-                "n_kmers": n_kmers,
-                "card_est": cards,
-                "band_key": bkeys,
-                "fp1": fp1,
-                "fp2": fp2,
-            }
-        )
-
-    return sketch_udf
-
-
+# declared nullable: the published schema of sketch_documents_with_counts
 COUNT_SKETCH_FIELDS = StructType(
     [
-        StructField("sketch", BinaryType(), False),
+        StructField("sketch", BinaryType()),
         # multiplicity of each surviving sketch hash, aligned with the
         # sketch order (reference -M counts, HashSet.cpp:48-76)
-        StructField("counts", ArrayType(IntegerType()), False),
-        StructField("n_kmers", LongType(), False),
-        StructField("card_est", LongType(), False),
+        StructField("counts", ArrayType(IntegerType())),
+        StructField("n_kmers", LongType()),
+        StructField("card_est", LongType()),
     ]
 )
-
-
-def make_minhash_count_udf(params: SketchParams):
-    """SURVEY §2.8 ``minhash_count_udf``: text -> struct<sketch, counts,
-    n_kmers, card_est> — the A1 bottom-k sketch WITH per-hash multiplicities
-    (reference reads-mode ``-M``/``-m``, ``MinHashHeap.cpp:96-118``,
-    ``HashSet.cpp:48-76``). Same single-murmur-pass batch layout as
-    ``make_sketch_udf``; counts feed the coverage estimate (A6,
-    ``MinHashHeap.h:44``) and the count histogram (A7,
-    ``CommandInfo.cpp:187-220``)."""
-    k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-
-    @pandas_udf(COUNT_SKETCH_FIELDS)
-    def minhash_count_udf(texts: pd.Series) -> pd.DataFrame:
-        vals = texts.fillna("").astype(str).tolist()
-        bufs = [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for t in vals]
-        lens = [len(b) for b in bufs]
-        big = np.concatenate(bufs) if bufs else np.empty(0, dtype=np.uint8)
-        all_h = hash_shingles_concat(big, k, seed)
-
-        n_rows = len(lens)
-        sketches, counts_col = [], []
-        n_kmers = np.zeros(n_rows, dtype=np.int64)
-        cards = np.zeros(n_rows, dtype=np.int64)
-        off = 0
-        for i, blen in enumerate(lens):
-            if blen < k:
-                sk = np.empty(0, dtype=np.uint64)
-                cnt = np.empty(0, dtype=np.int32)
-                nk = 0
-            else:
-                nk = blen - k + 1
-                sk, cnt = bottom_k(
-                    all_h[off : off + nk], s, min_cov=min_cov, with_counts=True
-                )
-            off += blen
-            n_kmers[i] = nk
-            cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-            sketches.append(encode_signed(sk).tobytes())  # int64 IS <i8 here (LE asserted)
-            counts_col.append(cnt)
-        return pd.DataFrame(
-            {
-                "sketch": sketches,
-                "counts": counts_col,
-                "n_kmers": n_kmers,
-                "card_est": cards,
-            }
-        )
-
-    return minhash_count_udf
-
-
-def sketch_documents_with_counts(df: DataFrame, params: SketchParams,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> DataFrame:
-    """documents -> (doc_id, sketch, counts, n_kmers, card_est). Map-only,
-    like ``sketch_documents`` but with multiplicities kept (A2)."""
-    udf = make_minhash_count_udf(params)
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .withColumn("_sk", udf(F.col("text")))
-        .select(
-            "doc_id",
-            F.col("_sk.sketch").alias("sketch", metadata=_params_meta(params)),
-            F.col("_sk.counts").alias("counts"),
-            F.col("_sk.n_kmers").alias("n_kmers"),
-            F.col("_sk.card_est").alias("card_est"),
-        )
-    )
 
 
 def _params_meta(params: SketchParams) -> dict:
@@ -294,153 +184,165 @@ def _params_meta(params: SketchParams) -> dict:
     return {PARAMS_META_KEY: params.to_dict()}
 
 
-def make_sketch_arrow_gen(params: SketchParams, lsh: LSHParams,
-                          id_col: str = "doc_id", text_col: str = "text"):
-    """mapInArrow generator: RecordBatch(doc_id, text) -> RecordBatch(
-    doc_id, sketch, n_kmers, card_est, band_key, fp1, fp2).
+def _list_array(parts: list, value_type) -> pa.ListArray:
+    """Arrow list column from per-row numpy arrays (one concatenation)."""
+    offs = np.zeros(len(parts) + 1, dtype=np.int32)
+    offs[1:] = np.cumsum([len(p) for p in parts])
+    return pa.ListArray.from_arrays(
+        pa.array(offs, type=pa.int32()),
+        pa.array(np.concatenate(parts), type=value_type),
+    )
 
-    Why Arrow-native instead of a pandas UDF: the UDF's numpy core is
-    ~flat across parallelism, but the pandas wrapping was measured to
-    stall workers between batches — materializing every document as a
-    Python str on input and every 8 KB sketch as a Python bytes on output
-    is per-doc interpreter work plus an extra copy each way. Here the
-    input text is read straight out of the Arrow string buffer (the
+
+def _sketch_kernel(txt, params: SketchParams, with_counts: bool = False):
+    """The batch sketch kernel: Arrow string column -> per-row bottom-k.
+
+    Returns ``(sketches, counts, sketch_col, n_kmers, card_est)``: the
+    per-row uint64 sketches (ascending), their multiplicities (None
+    unless ``with_counts``), the Arrow binary column of sign-flip-encoded
+    sketch blobs, and int64 ``n_kmers``/``card_est`` arrays.
+
+    The input text is read straight out of the Arrow string buffer (the
     offsets+data layout IS the concatenated-bytes layout the one-pass
-    murmur wants, zero copies), and the output sketch/band columns are
-    built zero-copy from numpy buffers.
+    murmur wants), and the sketch column is built from numpy buffers, so
+    no document becomes a Python str or bytes object. Null text sketches
+    like empty text; docs shorter than k get an empty sketch.
     """
-    import pyarrow as pa
+    k, s, min_cov = params.k, params.s, params.min_cov
+    if isinstance(txt, pa.ChunkedArray):
+        txt = txt.combine_chunks()
+    if txt.null_count:
+        txt = txt.fill_null("")
+    if pa.types.is_large_string(txt.type):
+        txt = txt.cast(pa.string())
+    n_rows = len(txt)
+    bufs = txt.buffers()
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[txt.offset : txt.offset + n_rows + 1]
+    data = np.frombuffer(bufs[2], dtype=np.uint8)
+    # one explicit copy into process-heap memory: repeated reads from the
+    # Arrow-allocated buffer are ~11x slower (measured) — the copy is
+    # 2 MB/batch and pays for itself in the first murmur chunk
+    big = data[offs[0] : offs[-1]].copy()
+    all_h = hash_shingles_concat(big, k, params.seed)
+    n_kmers = np.maximum(np.diff(offs).astype(np.int64) - (k - 1), 0)
 
-    k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-    bands, prefix = lsh.bands, lsh.prefix
+    # per-row: only the bottom-k itself. Encoding, offsets, band keys and
+    # fp128 run as whole-batch array ops (the per-doc numpy calls were
+    # ~2/3 of this kernel's CPU, profiled at 5k docs)
+    empty = np.empty(0, dtype=np.uint64)
+    sks = [(empty, np.empty(0, dtype=np.int32)) if with_counts else empty] * n_rows
+    starts, nks = (offs[:-1] - offs[0]).tolist(), n_kmers.tolist()
+    for i in np.flatnonzero(n_kmers).tolist():
+        off = starts[i]
+        sks[i] = bottom_k(all_h[off : off + nks[i]], s, min_cov=min_cov,
+                          with_counts=with_counts)
+    counts = None
+    if with_counts:
+        sks, counts = zip(*sks)
+    cards = np.array(
+        [kmv_set_size(sk) if len(sk) >= s else len(sk) for sk in sks],
+        dtype=np.int64,
+    )
+    sk_offs = np.zeros(n_rows + 1, dtype=np.int32)
+    sk_offs[1:] = np.cumsum([8 * len(sk) for sk in sks])
+    sk_values = encode_signed(np.concatenate(sks)).view(np.uint8)  # int64 IS <i8 (LE)
+    sketch_col = pa.Array.from_buffers(
+        pa.binary(), n_rows, [None, pa.py_buffer(sk_offs), pa.py_buffer(sk_values)]
+    )
+    return sks, counts, sketch_col, n_kmers, cards
+
+
+def _pipeline_columns(txt, params: SketchParams, lsh: LSHParams) -> list:
+    """``SKETCH_FIELDS`` columns of one batch."""
+    sks, _, sketch_col, n_kmers, cards = _sketch_kernel(txt, params)
+    fp1, fp2 = batch_fp128(sks)
+    return [
+        sketch_col,
+        pa.array(n_kmers, type=pa.int64()),
+        pa.array(cards, type=pa.int64()),
+        _list_array(batch_band_keys(sks, lsh.bands, lsh.prefix), pa.int64()),
+        pa.array(fp1, type=pa.int64()),
+        pa.array(fp2, type=pa.int64()),
+    ]
+
+
+def _count_columns(txt, params: SketchParams) -> list:
+    """``COUNT_SKETCH_FIELDS`` columns of one batch."""
+    _, counts, sketch_col, n_kmers, cards = _sketch_kernel(txt, params, with_counts=True)
+    return [
+        sketch_col,
+        _list_array(counts, pa.int32()),
+        pa.array(n_kmers, type=pa.int64()),
+        pa.array(cards, type=pa.int64()),
+    ]
+
+
+def _map_sketches(inp: DataFrame, head: list, fields: StructType,
+                  columns) -> DataFrame:
+    """mapInArrow over ``inp`` (a ``text`` column plus the ``head``
+    columns): each batch's ``head`` columns pass through unchanged and
+    ``columns(text)`` supplies the ``fields`` columns."""
+    names = [f.name for f in head] + fields.fieldNames()
 
     def gen(batches):
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            ids = batch.column(id_col)
-            txt = batch.column(text_col)
-            if isinstance(txt, pa.ChunkedArray):
-                txt = txt.combine_chunks()
-            if txt.null_count:
-                txt = txt.fill_null("")
-            if pa.types.is_large_string(txt.type):
-                txt = txt.cast(pa.string())
-            bufs = txt.buffers()
-            all_offs = np.frombuffer(bufs[1], dtype=np.int32)
-            offs = all_offs[txt.offset : txt.offset + n_rows + 1]
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            # one explicit copy into process-heap memory: repeated reads
-            # from the Arrow-allocated buffer are ~11x slower on this host
-            # (measured) — the copy is 2 MB/batch and pays for itself in
-            # the first murmur chunk
-            big = data[offs[0] : offs[-1]].copy()
-            lens = np.diff(offs)
-
-            all_h = hash_shingles_concat(big, k, seed)
-
-            # per-row: only the bottom-k itself. Band keys and fp128 go
-            # through their BATCH kernels (one stable argsort/reduceat
-            # over the whole batch, bit-identical to the per-doc forms —
-            # asserted by tests): the per-doc calls were ~2/3 of this
-            # generator's CPU (profiled round 4: 0.89 s of 1.31 s at
-            # 5k docs — the round-3 q1 sketch regression).
-            raw_sks, sk_parts = [], []
-            sk_offs = np.zeros(n_rows + 1, dtype=np.int32)
-            bk_offs = np.zeros(n_rows + 1, dtype=np.int32)
-            n_kmers = np.zeros(n_rows, dtype=np.int64)
-            cards = np.zeros(n_rows, dtype=np.int64)
-            off = 0
-            for i in range(n_rows):
-                blen = int(lens[i])
-                if blen < k:
-                    sk = np.empty(0, dtype=np.uint64)
-                    nk = 0
-                else:
-                    nk = blen - k + 1
-                    sk = bottom_k(all_h[off : off + nk], s, min_cov=min_cov)
-                off += blen
-                n_kmers[i] = nk
-                cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-                raw_sks.append(sk)
-                sk_parts.append(encode_signed(sk))
-                sk_offs[i + 1] = sk_offs[i] + 8 * len(sk)
-            bkeys = batch_band_keys(raw_sks, bands, prefix)
-            fp1, fp2 = batch_fp128(raw_sks)
-            bk_parts = bkeys
-            for i in range(n_rows):
-                bk_offs[i + 1] = bk_offs[i] + len(bkeys[i])
-
-            sk_values = (
-                np.concatenate(sk_parts).view(np.uint8)  # int64 IS <i8 (LE)
-                if sk_parts else np.empty(0, dtype=np.uint8)
-            )
-            bk_values = (
-                np.concatenate(bk_parts) if bk_parts else np.empty(0, dtype=np.int64)
-            )
-            sketch_arr = pa.Array.from_buffers(
-                pa.binary(), n_rows,
-                [None, pa.py_buffer(sk_offs), pa.py_buffer(sk_values)],
-            )
-            band_arr = pa.ListArray.from_arrays(
-                pa.array(bk_offs, type=pa.int32()),
-                pa.array(bk_values, type=pa.int64()),
-            )
             yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    sketch_arr,
-                    pa.array(n_kmers, type=pa.int64()),
-                    pa.array(cards, type=pa.int64()),
-                    band_arr,
-                    pa.array(fp1, type=pa.int64()),
-                    pa.array(fp2, type=pa.int64()),
-                ],
-                names=["doc_id", "sketch", "n_kmers", "card_est",
-                       "band_key", "fp1", "fp2"],
+                [batch.column(f.name) for f in head] + columns(batch.column("text")),
+                names=names,
             )
 
-    return gen
+    return inp.mapInArrow(gen, schema=StructType(head + list(fields.fields)))
+
+
+def sketch_documents_with_counts(df: DataFrame, params: SketchParams,
+                                 id_col: str = "doc_id",
+                                 text_col: str = "text") -> DataFrame:
+    """documents -> (doc_id, sketch, counts, n_kmers, card_est). Map-only,
+    like ``sketch_documents`` but with multiplicities kept (reference
+    reads-mode ``-M``/``-m``, ``MinHashHeap.cpp:96-118``,
+    ``HashSet.cpp:48-76``): counts feed the coverage estimate
+    (``MinHashHeap.h:44``) and the count histogram
+    (``CommandInfo.cpp:187-220``)."""
+    inp = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    out = _map_sketches(inp, [inp.schema["doc_id"]], COUNT_SKETCH_FIELDS,
+                        partial(_count_columns, params=params))
+    return out.select(
+        "doc_id",
+        F.col("sketch").alias("sketch", metadata=_params_meta(params)),
+        "counts",
+        "n_kmers",
+        "card_est",
+    )
 
 
 def sketch_documents(df: DataFrame, params: SketchParams, lsh: LSHParams,
                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents -> (doc_id, sketch, n_kmers, card_est, band_key, fp1, fp2).
 
-    Map-only, one vectorized Arrow pass (``make_sketch_arrow_gen``). Docs
-    shorter than k yield an EMPTY sketch inside the UDF (reference skips
-    such records, ``Sketch.cpp:337-341``); they stay in the output as
-    unsketchable rows so downstream cluster assignment keeps them as
-    singletons.
+    Map-only, one vectorized Arrow pass (``_sketch_kernel``). Docs shorter
+    than k get an EMPTY sketch (reference skips such records,
+    ``Sketch.cpp:337-341``); they stay in the output as unsketchable rows
+    so downstream cluster assignment keeps them as singletons.
 
-    Round-6 reversal of the round-4 mapInArrow rejection: with the u64
-    murmur kernel and lean bottom_k the numpy core got ~2x faster, so the
-    pandas wrapping (per-doc str materialization in, per-doc bytes out)
-    became the larger share — re-measured at 12 cores on the 70k-doc
-    bench corpus: arrow 1.85 s vs pandas 2.35 s noop-isolated, rows
-    bit-identical (pinned by test_sketch_arrow_matches_pandas). The
-    pandas UDF (``make_sketch_udf``) remains for callers that need it.
+    Arrow-native rather than a pandas UDF: the pandas wrapping (per-doc
+    str materialization in, per-doc bytes out) measured 2.35 s against
+    1.85 s for this path on the 70k-doc bench corpus at 12 cores.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    gen = make_sketch_arrow_gen(params, lsh)
-    out_schema = StructType(
-        [StructField("doc_id", LongType(), False)] + list(SKETCH_FIELDS.fields)
+    inp = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                    F.col(text_col).alias("text"))
+    out = _map_sketches(inp, [StructField("doc_id", LongType(), False)],
+                        SKETCH_FIELDS,
+                        partial(_pipeline_columns, params=params, lsh=lsh))
+    return out.select(
+        "doc_id",
+        # params fingerprint rides in the column metadata so downstream
+        # comparisons can refuse incompatible tables (F6, Sketch.cpp:133-160)
+        F.col("sketch").alias("sketch", metadata=_params_meta(params)),
+        "n_kmers",
+        "card_est",
+        "band_key",
+        "fp1",
+        "fp2",
     )
-    out = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .mapInArrow(gen, schema=out_schema)
-        .select(
-            "doc_id",
-            # params fingerprint rides in the column metadata so downstream
-            # comparisons can refuse incompatible tables (F6, Sketch.cpp:133-160)
-            F.col("sketch").alias("sketch", metadata=_params_meta(params)),
-            "n_kmers",
-            "card_est",
-            "band_key",
-            "fp1",
-            "fp2",
-        )
-    )
-    return out

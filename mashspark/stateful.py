@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import re
+from functools import partial
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -63,6 +64,7 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
 from .compare import capped_merge_sorted_batch
 from .hashing import signed_sketch_bytes
 from .params import LSHParams, SketchParams
+from .sketch import SKETCH_FIELDS, _map_sketches, _pipeline_columns
 
 #: Session confs for running these operators at production state sizes:
 #: the default HDFS-backed state store keeps every key's state on the
@@ -233,7 +235,7 @@ def stateful_band_dedup(stream_df: DataFrame, params: SketchParams,
     parquet; this shape suits dedup horizons that fit state, e.g. a
     rolling crawl window).
 
-    Each doc is sketched in-stream (same vectorized sketch UDF as the
+    Each doc is sketched in-stream (same Arrow sketch kernel as the
     batch path), exploded to its LSH band keys, and each band group
     verifies arrivals against its register of (doc_id, ``prefix_len``
     bottom-k prefix) entries via the batch pipeline's capped-merge
@@ -328,20 +330,14 @@ def stateful_band_dedup(stream_df: DataFrame, params: SketchParams,
                 "est_jaccard": common_arr / denom_arr,
             })
 
-    # same vectorized sketch UDF as the batch path, applied inline so the
-    # event-time column survives (sketch_documents projects it away, and
-    # re-attaching it would be a stream-stream join)
-    from .sketch import make_sketch_udf
-
-    udf = make_sketch_udf(params, lsh)
-    sk = (
-        stream_df.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text"), F.col(ts_col))
-        .withColumn("_sk", udf(F.col("text")))
-        .select("doc_id", ts_col,
-                F.col("_sk.sketch").alias("sketch"),
-                F.col("_sk.band_key").alias("band_key"))
-    )
+    # same Arrow sketch kernel as the batch path, applied inline so the
+    # event-time column passes through (sketch_documents projects it
+    # away, and re-attaching it would be a stream-stream join)
+    inp = stream_df.select(F.col(id_col).alias("doc_id"),
+                           F.col(text_col).alias("text"), F.col(ts_col))
+    sk = _map_sketches(inp, [inp.schema["doc_id"], inp.schema[ts_col]],
+                       SKETCH_FIELDS,
+                       partial(_pipeline_columns, params=params, lsh=lsh))
     exploded = (
         sk.filter(F.size("band_key") > 0)
         .select(

@@ -28,6 +28,10 @@ _MERGE_FIELDS = StructType(
     [StructField("common", IntegerType(), False), StructField("denom", IntegerType(), False)]
 )
 
+#: tier-1 pre-filter slack below the Jaccard threshold (widened to 6 sd of
+#: the prefix estimator when that is larger, see ``verify_pairs``)
+PREFIX_MARGIN = 0.15
+
 
 def make_verify_udf(sketch_size: int):
     """(sketch_a, sketch_b) -> struct(common, denom).
@@ -205,7 +209,6 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
                  max_pvalue: float | None = None,
                  with_pvalue: bool = False,
                  prefix_filter: int | None = 128,
-                 prefix_margin: float = 0.15,
                  materialize_tier1: bool = True) -> DataFrame:
     """Attach Mash-exact (common, denom, jaccard, mash_dist[, p_value]) to a
     candidate-pair DataFrame (id_a, id_b), id_a < id_b.
@@ -214,7 +217,7 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
     are set: tier 1 joins only the bottom-``prefix_filter`` prefix of each
     sketch (``substring`` of the binary blob — 1 KB instead of 8 KB per
     side) and drops pairs whose prefix-Jaccard estimate is below
-    ``threshold - prefix_margin``; tier 2 runs the full-s Mash-exact merge
+    ``threshold - PREFIX_MARGIN``; tier 2 runs the full-s Mash-exact merge
     on the survivors. The prefix estimate over m hashes has sd
     ~ sqrt(j(1-j)/m) (~0.04 at m=128, j=0.7), so a 0.15 margin is >3.5 sd
     — boilerplate-only candidate junk (j ~ 0.0-0.3) dies at 1/8 of the
@@ -249,7 +252,7 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
 
         t = float(jaccard_threshold)
         sigma = math.sqrt(max(t * (1.0 - t), 0.05) / float(prefix_filter))
-        prefix_margin = max(float(prefix_margin), 6.0 * sigma)
+        margin = max(PREFIX_MARGIN, 6.0 * sigma)
         pre = F.substring(F.col("sketch"), 1, int(prefix_filter) * 8)
         pvu = make_verify_udf(int(prefix_filter))
         tier1 = _attach(cands, sk, "id_a", "a", pre, small=small)
@@ -261,7 +264,7 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             (F.col("_p.common") / F.greatest(F.col("_p.denom"), F.lit(1))).alias("_jpre"),
         )
         cands = tier1.filter(
-            F.col("_jpre") >= float(jaccard_threshold) - float(prefix_margin)
+            F.col("_jpre") >= float(jaccard_threshold) - margin
         ).select("id_a", "id_b")
         if materialize_tier1:
             # materialize the survivor list ONCE (16 B rows): it is
@@ -279,7 +282,7 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             # .release() sweeps every checkpoint created during the run).
             # eager: the survivor list has three consumers whose AQE jobs
             # launch concurrently; a lazy checkpoint makes their tasks
-            # race on the checkpoint lock (see lsh.candidate_pairs).
+            # race on the checkpoint lock (see pipeline.dedup_pipeline).
             cands = cands.localCheckpoint(eager=True)
         # restrict the fat table to survivor ids BEFORE the attach joins so
         # they only move survivors' sketches instead of the whole table.

@@ -98,7 +98,7 @@ def _serial_pipeline(sf_dir: str, texts: dict[int, str] | None = None,
     + verify.verify_pairs; composition is serial brute force."""
     import math
 
-    from mashspark.compare import capped_merge_sorted
+    from mashspark.compare import capped_merge
     from mashspark.minhash import sketch_text_bytes
     from mashspark.sketch import compute_band_keys
 
@@ -156,10 +156,10 @@ def _serial_pipeline(sf_dir: str, texts: dict[int, str] | None = None,
     pairs = []
     for a, b in sorted(cand):
         pa, pb = sketches[a][:prefix], sketches[b][:prefix]
-        c1, d1 = capped_merge_sorted(pa, pb, prefix)
+        c1, d1 = capped_merge(pa, pb, prefix)
         if c1 / max(d1, 1) < jt - margin:
             continue
-        c2, d2 = capped_merge_sorted(sketches[a], sketches[b], s)
+        c2, d2 = capped_merge(sketches[a], sketches[b], s)
         j = c2 / d2 if d2 > 0 else 0.0
         if j >= jt:
             pairs.append((a, b, int(c2), int(d2)))
@@ -636,7 +636,7 @@ def _exp_streaming_dedup_decisions(sf_dir: str) -> pd.DataFrame:
     aligned with the query's coalesce)."""
     import math
 
-    from mashspark.compare import capped_merge_sorted
+    from mashspark.compare import capped_merge
     from mashspark.minhash import sketch_text_bytes
     from mashspark.sketch import compute_band_keys
 
@@ -654,10 +654,10 @@ def _exp_streaming_dedup_decisions(sf_dir: str) -> pd.DataFrame:
 
     def verified(a: int, b: int) -> bool:
         pa, pb = sk[a][:prefix], sk[b][:prefix]
-        c1, d1 = capped_merge_sorted(pa, pb, prefix)
+        c1, d1 = capped_merge(pa, pb, prefix)
         if c1 / max(d1, 1) < jt - margin:
             return False
-        c2, d2 = capped_merge_sorted(sk[a], sk[b], s)
+        c2, d2 = capped_merge(sk[a], sk[b], s)
         return d2 > 0 and c2 / d2 >= jt
 
     decisions: dict[int, int] = {}
@@ -884,7 +884,7 @@ def _exp_cross_dedup_decisions(sf_dir: str) -> pd.DataFrame:
     best ref = (max jaccard, min ref id); novel docs emit dup_of = -1."""
     import math
 
-    from mashspark.compare import capped_merge_sorted
+    from mashspark.compare import capped_merge
     from mashspark.minhash import sketch_text_bytes
     from mashspark.sketch import compute_band_keys
 
@@ -909,11 +909,10 @@ def _exp_cross_dedup_decisions(sf_dir: str) -> pd.DataFrame:
         cands = sorted({r for key in bk[n] for r in ref_by_band.get(key, [])})
         best = None  # (jaccard, -ref_id)
         for r in cands:
-            c1, d1 = capped_merge_sorted(sk[n][:prefix], sk[r][:prefix],
-                                         prefix)
+            c1, d1 = capped_merge(sk[n][:prefix], sk[r][:prefix], prefix)
             if c1 / max(d1, 1) < jt - margin:
                 continue
-            c2, d2 = capped_merge_sorted(sk[n], sk[r], s)
+            c2, d2 = capped_merge(sk[n], sk[r], s)
             j = c2 / d2 if d2 > 0 else 0.0
             if j >= jt and (best is None or (j, -r) > best):
                 best = (j, -r)
@@ -1190,7 +1189,7 @@ def _exp_dedup_recall_audit(sf_dir: str) -> pd.DataFrame:
     full-s capped-merge ground truth, recovered = same serial-CC label."""
     import hashlib
 
-    from mashspark.compare import capped_merge_sorted
+    from mashspark.compare import capped_merge
 
     pipe = _serial_pipeline(sf_dir)
     sketches, clusters = pipe["sketches"], pipe["clusters"]
@@ -1204,7 +1203,7 @@ def _exp_dedup_recall_audit(sf_dir: str) -> pd.DataFrame:
     for x in range(len(sample)):
         for y in range(x + 1, len(sample)):
             a, b = sample[x], sample[y]
-            c, d = capped_merge_sorted(sketches[a], sketches[b], s_full)
+            c, d = capped_merge(sketches[a], sketches[b], s_full)
             j = c / d if d > 0 else 0.0
             if j >= jt:
                 tp += 1
@@ -1224,7 +1223,7 @@ def _exp_stateful_band_dup_pairs(sf_dir: str) -> pd.DataFrame:
     at 12:05): per-band capped registers as python dicts, arrivals in
     (batch, ts, doc_id) order, tier-1 capped-merge prefix verify — the
     same golden-tested kernels, composed serially."""
-    from mashspark.compare import capped_merge_sorted
+    from mashspark.compare import capped_merge
     from mashspark.minhash import sketch_text_bytes
     from mashspark.sketch import compute_band_keys
 
@@ -1246,7 +1245,7 @@ def _exp_stateful_band_dup_pairs(sf_dir: str) -> pd.DataFrame:
             band = int(np.int64(np.uint64(bk)))
             reg = registers.setdefault(band, [])
             for hist_id, hist_pref in reg:
-                common, denom = capped_merge_sorted(hist_pref, pref, PL)
+                common, denom = capped_merge(hist_pref, pref, PL)
                 if denom > 0 and common >= THR * denom:
                     out["doc_id"].append(doc_id)
                     out["matched_id"].append(hist_id)

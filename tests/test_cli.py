@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 from mashspark import cli
-from mashspark.compare import capped_merge_sorted, mash_distance
+from mashspark.compare import capped_merge, mash_distance
 from mashspark.hashing import decode_sketch_bytes
 from mashspark.params import LSHParams, SketchParams
 from mashspark.sketch import sketch_documents
@@ -49,7 +49,7 @@ def test_cross_dist_matches_numpy(spark, docs_parquet):
     for _, row in out.sample(n=10, random_state=0).iterrows():
         a = np.sort(decode_sketch_bytes(bytes(blobs[row["id_a"]])))
         b = np.sort(decode_sketch_bytes(bytes(blobs[row["id_b"]])))
-        common, denom = capped_merge_sorted(a, b, PARAMS.s)
+        common, denom = capped_merge(a, b, PARAMS.s)
         assert row["common"] == common and row["denom"] == denom
         assert math.isclose(row["mash_dist"], mash_distance(common, denom, PARAMS.k),
                             rel_tol=1e-12)

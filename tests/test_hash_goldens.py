@@ -250,7 +250,7 @@ def test_capped_merge_batch_scratch_reuse():
             arrs_b.append(np.sort(b))
         common, denom = compare.capped_merge_sorted_batch(arrs_a, arrs_b, s)
         for i in range(n):
-            exp = compare.capped_merge_sorted(
+            exp = compare.capped_merge(
                 decode_signed(arrs_a[i]), decode_signed(arrs_b[i]), s)
             assert (common[i], denom[i]) == exp, (trial, i, s)
 

@@ -126,39 +126,71 @@ def test_lsh_metrics_shape(result):
     assert row.n_dropped_buckets == 0
 
 
-def test_sketch_arrow_matches_pandas(spark):
-    """Round-6: sketch_documents switched to the mapInArrow generator —
-    pin bit-identity against the pandas UDF path across null text, short
-    docs (< k), empty docs, and non-default column names."""
-    from pyspark.sql import functions as F
-
-    from mashspark.params import LSHParams, SketchParams
-    from mashspark.sketch import make_sketch_udf, sketch_documents
+def test_sketch_documents_matches_scalar_reference(spark):
+    """Every sketch_documents / sketch_documents_with_counts row equals
+    the per-doc scalar forms — sketch_text_bytes, the n_kmers count, the
+    KMV estimate, compute_band_keys and sketch_fp128 — across null text,
+    empty and short docs (< k), a doc of exactly k bytes, a duplicate,
+    unicode text, a doc above s distinct k-mers, and non-default column
+    names."""
+    from mashspark.hashing import encode_signed
+    from mashspark.minhash import kmv_set_size, sketch_text_bytes
+    from mashspark.sketch import (compute_band_keys, sketch_documents,
+                                  sketch_documents_with_counts, sketch_fp128)
 
     rows = [(1, "the quick brown fox jumps over the lazy dog " * 30),
             (2, None), (3, ""), (4, "tiny"), (5, "x" * 21),
             (6, "the quick brown fox jumps over the lazy dog " * 30),
-            (7, "unicode éèê content " * 40)]
+            (7, "unicode éèê content " * 40),
+            (8, " ".join(f"word{i}" for i in range(200)))]
     docs = spark.createDataFrame(rows, "my_id long, body string")
     sp, lp = SketchParams(s=64), LSHParams(prefix=32)
+    cols = dict(id_col="my_id", text_col="body")
 
-    arrow = sketch_documents(docs, sp, lp, id_col="my_id", text_col="body")
-    udf = make_sketch_udf(sp, lp)
-    pandas = (
-        docs.select(F.col("my_id").alias("doc_id"), F.col("body").alias("text"))
-        .withColumn("_sk", udf(F.col("text")))
-        .select("doc_id", "_sk.sketch", "_sk.n_kmers", "_sk.card_est",
-                "_sk.band_key", "_sk.fp1", "_sk.fp2")
-    )
-    a = {r["doc_id"]: r for r in arrow.collect()}
-    p = {r["doc_id"]: r for r in pandas.collect()}
-    assert set(a) == set(p)
-    for d in a:
-        ra, rp = a[d], p[d]
-        assert bytes(ra["sketch"]) == bytes(rp["sketch"]), d
-        assert ra["n_kmers"] == rp["n_kmers"] and ra["card_est"] == rp["card_est"]
-        assert list(ra["band_key"]) == list(rp["band_key"]), d
-        assert ra["fp1"] == rp["fp1"] and ra["fp2"] == rp["fp2"]
+    got = {r["doc_id"]: r for r in sketch_documents(docs, sp, lp, **cols).collect()}
+    cnt = {r["doc_id"]: r for r in
+           sketch_documents_with_counts(docs, sp, **cols).collect()}
+    assert set(got) == set(cnt) == {d for d, _ in rows}
+    assert len(got[8]["sketch"]) == 8 * sp.s  # the KMV branch is exercised
+    for doc_id, text in rows:
+        data = (text or "").encode("utf-8")
+        ref, ref_counts = sketch_text_bytes(data, sp.k, sp.s, sp.seed,
+                                            with_counts=True)
+        blob = encode_signed(ref).astype("<i8").tobytes()
+        card = kmv_set_size(ref) if len(ref) >= sp.s else len(ref)
+        r, c = got[doc_id], cnt[doc_id]
+        assert bytes(r["sketch"]) == blob == bytes(c["sketch"]), doc_id
+        assert r["n_kmers"] == c["n_kmers"] == max(len(data) - sp.k + 1, 0)
+        assert r["card_est"] == c["card_est"] == card, doc_id
+        assert list(r["band_key"]) == compute_band_keys(
+            ref, lp.bands, lp.prefix).view(np.int64).tolist(), doc_id
+        assert (r["fp1"], r["fp2"]) == sketch_fp128(ref), doc_id
+        assert list(c["counts"]) == ref_counts.tolist(), doc_id
+
+
+def test_degenerate_texts_end_to_end(spark):
+    """Null, empty and shorter-than-k docs stay one-label singletons
+    (even when byte-identical to each other), byte-identical long docs
+    share their min-id cluster, and exact collapse keeps one row per
+    input doc — the invariant cluster completeness rests on."""
+    long_a = "near duplicate detection at web scale with bottom k sketches " * 8
+    long_b = "an unrelated document about something else entirely, padded " * 8
+    rows = [(10, None), (11, None), (12, ""), (13, ""), (14, "short"),
+            (15, "short"), (16, "x" * (PARAMS.k - 1)), (20, long_a),
+            (21, long_b), (22, long_a), (23, long_a)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    res = dedup_pipeline(docs, CONFIG)
+    try:
+        assert res.exact_groups.count() == res.sketches.count() == len(rows)
+        labels = [(r.doc_id, r.cluster_id) for r in res.clusters.collect()]
+        assert sorted(d for d, _ in labels) == sorted(d for d, _ in rows)
+        clusters = dict(labels)
+        for d in range(10, 17):
+            assert clusters[d] == d, d
+        assert clusters[20] == clusters[22] == clusters[23] == 20
+        assert clusters[21] == 21
+    finally:
+        res.release()
 
 
 def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):

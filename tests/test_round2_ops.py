@@ -298,7 +298,9 @@ def test_capped_merge_sorted_equivalence():
         cases.append((a, b, s))
     cases.append((np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.uint64), 10))
     for a, b, s in cases:
-        assert compare.capped_merge_sorted(a, b, s) == compare.capped_merge(a, b, s)
+        common, denom = compare.capped_merge_sorted_batch(
+            [np.sort(encode_signed(a))], [np.sort(encode_signed(b))], s)
+        assert (common[0], denom[0]) == compare.capped_merge(a, b, s)
 
 
 def test_contain_closed_form_vs_reference_loop():

@@ -238,8 +238,10 @@ def test_time_travel_as_of_timestamp(spark, tmp_path):
 
     t = str(tmp_path / "tbl")
     snap.commit_append(spark, _df(spark, 0, 10), t)
-    ts_between = _t.time() + 0.5
-    _t.sleep(1.2)  # committed_at has 1 s resolution
+    # committed_at has 1 s resolution: pick the whole second after the
+    # first commit, and commit again only once that second has passed.
+    ts_between = float(int(_t.time()) + 1)
+    _t.sleep(ts_between + 1.1 - _t.time())
     snap.commit_append(spark, _df(spark, 10, 25), t)
     after = _t.time() + 1
     assert snap.version_as_of(t, ts_between) == 1
