@@ -711,7 +711,8 @@ def _timed_scale_job(spark, docs, cfg, cores: int, n_docs: int) -> dict:
     from pyspark.sql import functions as F
 
     from mashspark import lsh as _lsh
-    from mashspark.pipeline import _persistent_rdd_ids, exact_collapse
+    from mashspark.pipeline import (_persistent_rdd_ids, exact_collapse,
+                                    uncache_derived)
     from mashspark.sketch import sketch_documents
 
     burn = _burn_rate(1.0)
@@ -756,7 +757,9 @@ def _timed_scale_job(spark, docs, cfg, cores: int, n_docs: int) -> dict:
     py_cpu = round(cpu1["python"] - cpu0["python"], 2)
     jvm1 = _jvm_counters(spark)
     jvm_cpu = round(jvm1["jvm_cpu_sec"] - jvm0["jvm_cpu_sec"], 2)
-    # sweep this run's checkpoint blocks (outside the timed window)
+    # sweep this run's caches and checkpoint blocks (outside the timed
+    # window); the LSH band cache is derived from reps
+    uncache_derived(reps)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in _persistent_rdd_ids(spark) - ids0:
         rdd = jmap.get(rid)
@@ -1389,7 +1392,7 @@ def main():
     # its pages INSIDE the measured queries on this sandbox (session.py
     # pretouch comment) — q3 measured 332 s under the lazy 48g session
     # vs 49 s for the identical pipeline in a pretouched right-sized one
-    # (tools/profile_pipeline.py, same corpus, same cores).
+    # (same corpus, same cores).
     os.environ.setdefault("MASHSPARK_DRIVER_MEM", "16g")
     os.environ.setdefault("MASHSPARK_PRETOUCH", "1")
     spark = get_spark(cores=EFF_CPUS, shuffle_partitions=EFF_CPUS * 2, app_name="bench")

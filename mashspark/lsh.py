@@ -11,8 +11,8 @@ boilerplate-heavy hot buckets):
 1. **Exact-duplicate pre-collapse** happens upstream (``pipeline.py``):
    docs with identical sketches never reach the band join, which removes
    the dominant web-scale skew source (mirrored/templated pages).
-2. Buckets with <= band_doc_cap docs: plain self-join; AQE skew-join
-   splitting handles residual imbalance.
+2. Buckets with <= band_doc_cap docs: plain self-join, partition-local
+   over the band relation cached by band_key.
 3. Buckets with band_doc_cap < n <= hard_bucket_cap: **star candidates**
    — each member pairs with the bucket's min doc_id only (linear, not
    O(n^2); see the hot-path comment in ``candidate_pairs`` for why this
@@ -111,27 +111,33 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     last counts band ENTRIES in dropped buckets, an upper bound on
     affected docs).
 
-    Nothing is checkpointed here: every consumer of the band relation
-    (sizes groupBy, hot/cold branches, the self-join's two sides) sits in
-    one downstream plan where ReuseExchange shares the band-key exchange.
-    Callers that collect ``metrics`` later re-run the cheap
-    explode+groupBy.
+    The band relation is exploded ONCE, hash-partitioned by band_key and
+    cached (``persist`` + an eager count). Every consumer — the bucket
+    aggregate, ``metrics``, the hot/cold tagging and both self-join
+    sides — reads that copy, and since the cache keeps its band_key
+    partitioning, everything up to the pair ``distinct`` runs
+    partition-local. Uncached, each consumer re-explodes the sketch
+    table and plans its own band-key exchange (measured at 5,000 webtext
+    docs: 6 band exchanges and 6 fat-checkpoint reads per run). Not a
+    localCheckpoint: under AQE a checkpointed scan loses the band_key
+    partitioning. The caller frees the cache with
+    ``pipeline.uncache_derived`` on ``sketches`` or on a cached relation
+    that ``sketches`` is derived from (``DedupResult.release`` and the
+    streaming micro-batch do).
     """
-    bands = explode_bands(sketches)
+    n_parts = int(sketches.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bands = explode_bands(sketches).repartition(n_parts, "band_key").persist()
+    bands.count()
 
-    # bucket sizes via groupBy, NOT a window: groupBy does map-side
-    # partial aggregation (a hot boilerplate bucket is pre-reduced inside
-    # every input partition before the exchange), while a window over
-    # partitionBy(band_key) funnels the WHOLE mega-bucket into one
-    # unsplittable task at web scale. The size table is only consulted as
-    # two SMALL key sets (hot keys, pruned singleton keys are implicit:
-    # singleton buckets simply produce no self-join output), so the fat
-    # band relation is never joined against an O(buckets) table.
-    sizes = (
+    # per-bucket size and minimum doc_id (the star hub) via a hash
+    # groupBy over the co-partitioned cache: no exchange, no sort (a
+    # window would sort every partition). Singleton buckets produce no
+    # pair and are dropped here.
+    multi = (
         bands.groupBy("band_key")
-        .agg(F.count("*").alias("bucket_n"))
+        .agg(F.count("*").alias("bucket_n"), F.min("doc_id").alias("hub"))
+        .filter(F.col("bucket_n") > 1)
     )
-    multi = sizes.filter(F.col("bucket_n") > 1)
 
     # coalesce every sum: on a corpus with no multi-doc buckets `multi`
     # is empty and bare F.sum yields NULL, not 0 — operator code doing
@@ -152,26 +158,21 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
             F.lit(0).cast("long")).alias("n_dropped_docs"),
     )
 
-    # hot/dropped key sets are tiny (boilerplate phenomena — a handful of
-    # keys even at web scale); AQE broadcasts them, so tagging the band
-    # relation costs no extra shuffle and no unsplittable stage
-    hot_keys = sizes.filter(F.col("bucket_n") > band_doc_cap).select(
-        "band_key", "bucket_n"
-    )
-    cold = bands.join(hot_keys.select("band_key"), "band_key", "left_anti")
-    hot = bands.join(
-        hot_keys.filter(F.col("bucket_n") <= hard_bucket_cap), "band_key", "left_semi"
-    )
+    # tag every entry of a multi-doc bucket with its bucket's size and
+    # hub. Both sides are partitioned by band_key, so this join (and the
+    # self-join below) runs partition-local with no exchange and no
+    # broadcast job. SHUFFLE_HASH hints on both joins: at bench scale
+    # the sides slip under autoBroadcastJoinThreshold and AQE would pick
+    # BroadcastHashJoin, whose HashedRelation build is SERIAL DRIVER time
+    # (measured: a 4.5 s zero-task gap at 224k docs, the single largest
+    # serial cost in the timed scaling job), and for the self-join a
+    # broadcast of the O(corpus) band relation is never the right plan.
+    tagged = bands.join(multi.hint("shuffle_hash"), "band_key")
+    cold = tagged.filter(F.col("bucket_n") <= band_doc_cap).select("band_key", "doc_id")
+    hot = tagged.filter((F.col("bucket_n") > band_doc_cap)
+                        & (F.col("bucket_n") <= hard_bucket_cap))
 
-    # --- cold path: plain self-join per bucket (AQE splits residual skew).
-    # SHUFFLE_HASH hint on the self-join: both sides are the O(corpus)
-    # band relation, so a broadcast is never the right plan — but at
-    # bench scale the relation slips under autoBroadcastJoinThreshold
-    # and AQE picks BroadcastHashJoin, whose HashedRelation build is
-    # SERIAL DRIVER time (measured: a 4.5 s zero-task gap at 224k docs,
-    # the single largest serial cost in the timed scaling job; it taxes
-    # a short high-parallelism leg ~3x harder than the long low leg).
-    # The hint keeps the join shuffled-and-parallel at every scale.
+    # --- cold path: plain self-join per bucket.
     left = cold.withColumnRenamed("doc_id", "id_a")
     right = cold.withColumnRenamed("doc_id", "id_b")
     cold_pairs = left.hint("shuffle_hash").join(right, ["band_key"]).filter(
@@ -189,22 +190,15 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     # connected star, while (a)-case pairs die in verification at linear
     # cost. True pairs inside hot buckets additionally co-occur in their
     # colder content bands, so pair-level recall survives (asserted by the
-    # recall gate test). Salting is applied to the star hub join itself:
-    # the hub side is tiny and broadcast, so no task holds a whole bucket.
-    hubs = hot.groupBy("band_key").agg(F.min("doc_id").alias("hub"))
-    hot_pairs = (
-        hot.join(hubs, "band_key")  # AQE broadcasts when hubs is small
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(
-            "band_key",
-            F.least("doc_id", "hub").alias("id_a"),
-            F.greatest("doc_id", "hub").alias("id_b"),
-        )
-    )
+    # recall gate test). A hot bucket's entries sit in one partition of
+    # the cache (16 B each), but each yields one pair, never a quadratic
+    # fan-out.
+    hot_pairs = hot.filter(F.col("doc_id") != F.col("hub")).select(
+        F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
 
     pairs = (
         cold_pairs.select("id_a", "id_b")
-        .unionByName(hot_pairs.select("id_a", "id_b"))
+        .unionByName(hot_pairs)
         .distinct()
     )
     return pairs, metrics

@@ -12,13 +12,15 @@ Stage map to the reference: sketching = ``mash sketch``
 Scale notes (the 100 TB story):
 * sketching is map-only — linear in executors, no shuffle; its output is
   materialized once as raw row blocks (localCheckpoint — the columnar
-  cache builder chokes on 8 KB binary rows, see dedup_pipeline) and on a
-  real cluster is written bucketed by doc_id (Iceberg) so the doc_id
-  joins read it shuffle-free;
+  cache builder chokes on 8 KB binary rows, see dedup_pipeline);
 * exact-dup collapse shuffles only (doc_id, fp128) — 24 B/doc — and
   removes the mirrored/templated mega-buckets (skew source #1) before LSH;
-* the band join shuffles (band_key, doc_id) — 16 B per band entry, NOT the sketches;
-* every groupBy/join key is salted or AQE-split per ``lsh.py``.
+* LSH exchanges the exploded (band_key, doc_id) relation once — 16 B per
+  band entry, NOT the sketches — and caches it partitioned by band_key,
+  so bucket sizing and the self-join run partition-local;
+* verify moves only tier-1 survivors' sketches: a small sketch table is
+  cut to survivors map-side and broadcast; a web-scale one is cut by a
+  shuffled semi-join, which exchanges the fat table once by doc_id.
 """
 
 from __future__ import annotations
@@ -43,7 +45,8 @@ class DedupResult:
     edges: DataFrame         # duplicate edges over ALL docs (src, dst)
     clusters: DataFrame      # doc_id, cluster_id (min doc_id of cluster)
     lsh_metrics: DataFrame   # bucket/skew metrics (one row)
-    # RDD ids of the localCheckpointed materializations (sketches, pairs).
+    # RDD ids of the materializations this run created (the sketch
+    # checkpoint first, then caches and the other checkpoints).
     # NOTE a plain sketches.unpersist() is a SILENT NO-OP for checkpointed
     # DataFrames — the row blocks stay pinned until RDD GC or session end;
     # long-lived sessions running several pipelines must call release().
@@ -51,16 +54,26 @@ class DedupResult:
 
     def release(self) -> None:
         """Free every block this pipeline materialized: the cached
-        exact_groups map AND the localCheckpointed sketch/pair row blocks
-        (unpinned via the JVM persistent-RDD registry, the only handle
-        Spark exposes for checkpointed blocks)."""
-        self.exact_groups.unpersist()
+        exact_groups map and the LSH band cache (built over the reps,
+        which derive from exact_groups) AND the localCheckpointed
+        sketch/pair row blocks (unpinned via the JVM persistent-RDD
+        registry, the only handle Spark exposes for checkpointed
+        blocks)."""
+        uncache_derived(self.exact_groups)
         jsc = self.sketches.sparkSession.sparkContext._jsc
         jmap = jsc.getPersistentRDDs()
         for rid in self.ckpt_rdd_ids or []:
             rdd = jmap.get(rid)
             if rdd is not None:
                 rdd.unpersist()
+
+
+def uncache_derived(df: DataFrame) -> None:
+    """Drop every cached relation whose plan reads ``df``, ``df``'s own
+    cache entry included. ``DataFrame.unpersist`` drops only the entry
+    of that exact plan; this is its cascading form."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cache.uncacheQuery(df._jdf, True)
 
 
 def _persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from . import lsh as _lsh
 from . import verify as _verify
 from .params import PipelineConfig
+from .pipeline import uncache_derived
 from .sketch import sketch_documents
 
 
@@ -120,12 +121,11 @@ class IncrementalDeduper:
         """The foreachBatch callback (also callable directly in tests)."""
         cfg = self.config
         spark = batch_df.sparkSession
-        # .persist(), NOT localCheckpoint: checkpointing inside a
-        # foreachBatch callback breaks the microbatch's file-sink commit
-        # (reproduced in test_incremental_dedup_cross_batch), and the
-        # columnar-cache GC churn that makes the BATCH pipeline prefer
-        # localCheckpoint (pipeline.dedup_pipeline) is a per-trigger
-        # micro-batch non-issue here.
+        # .persist(): the columnar-cache GC churn that makes the BATCH
+        # pipeline prefer localCheckpoint (pipeline.dedup_pipeline) is a
+        # non-issue at micro-batch size, and a cached relation is freed
+        # together with the LSH band cache built on it (uncache_derived
+        # below) — no per-batch checkpoint blocks to sweep.
         sk = sketch_documents(batch_df, cfg.sketch, cfg.lsh).persist()
 
         # candidate pairs: in-batch LSH self-join ...
@@ -194,8 +194,8 @@ class IncrementalDeduper:
             cands, union_sk, cfg.sketch,
             jaccard_threshold=cfg.jaccard_threshold,
             prefix_filter=cfg.lsh.prefix,
-            # localCheckpoint inside foreachBatch breaks the micro-batch
-            # file-sink commit; per-batch tier-1 re-execution is cheap
+            # lazy tier 1: re-running it per consumer is cheap at
+            # micro-batch size and leaves no checkpoint blocks behind
             materialize_tier1=False,
         )
 
@@ -225,7 +225,8 @@ class IncrementalDeduper:
             "bucket",
             F.pmod(F.col("band_key"), F.lit(self.n_band_buckets)).cast("int"),
         ).write.partitionBy("bucket").mode("append").parquet(self.bands_path)
-        sk.unpersist()
+        # frees sk and every cache derived from it (the LSH band relation)
+        uncache_derived(sk)
 
 
 def incremental_dedup(stream_df: DataFrame, store_path: str,

@@ -154,18 +154,32 @@ def make_pvalue_udf(kmer_space: float, sketch_size: int):
 
 
 def _sketch_side_small(sk: DataFrame) -> bool:
-    """True when the optimizer's size estimate for the sketch relation
-    is confidently under the broadcast threshold. Checkpointed RDD scans
-    have no stats (estimate = defaultSizeInBytes, effectively infinite),
-    so the big-pipeline path always returns False; parquet-backed or
+    """True when the sketch relation is confidently under the broadcast
+    threshold. Two sizes are checked and the larger one counts: the
+    optimizer's estimate, and the stored size of any checkpointed scan
+    the relation reads. The second is needed because a checkpointed
+    scan inherits its estimate from the plan it was built from, which
+    for a sketch table is the input text: measured 2.2 MB estimated vs
+    36.9 MB stored at 5,000 webtext docs, and 31 MB vs 537 MB at 70k
+    docs. A side that is a filter or projection of those scans is never
+    larger than them, so the bound is safe. Parquet-backed or
     freshly-derived small tables (a 20-ref screen db, a few-hundred-doc
-    ground-truth subset) return True."""
+    ground-truth subset) and the checkpointed sketch table of a
+    few-thousand-doc run qualify; a web-scale table does not. The
+    stored size is read from the driver's storage status: no Spark job."""
     try:
-        est = int(sk._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())  # py4j converts the scala BigInt to int
+        plan = sk._jdf.queryExecution().optimizedPlan()
+        est = int(plan.stats().sizeInBytes())  # py4j: scala BigInt -> int
+        leaves = plan.collectLeaves()
+        ckpt_ids = {
+            leaves.apply(i).rdd().id() for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        }
+        infos = sk.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+        stored = sum(i.memSize() + i.diskSize() for i in infos if i.id() in ckpt_ids)
         thr = int(sk.sparkSession.conf.get(
             "spark.sql.autoBroadcastJoinThreshold"))
-        return 0 < thr and 0 <= est < thr
+        return 0 < thr and 0 <= max(est, stored) < thr
     except Exception:  # stats introspection is best-effort only
         return False
 
@@ -224,9 +238,11 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
     shuffle cost, true pairs are untouched, and the FINAL numbers are
     always the full-s exact ones (precision is never affected).
 
-    Join strategy: shuffled-hash joins (no fat-row sorts); the cheap
-    jaccard threshold runs before the p-value UDF (cheap-filter-first,
-    CommandDistance.cpp:409-417).
+    Join strategy: a sketch table that fits the broadcast threshold
+    (``_sketch_side_small``) is cut to tier-1 survivors map-side and
+    broadcast to the pairs; a larger one goes through shuffled-hash
+    joins (no fat-row sorts). The cheap jaccard threshold runs before
+    the p-value UDF (cheap-filter-first, CommandDistance.cpp:409-417).
     """
     embedded = params_from_schema(sketches)
     if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
@@ -273,11 +289,10 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             # subtree (attach joins + prefix-verify UDF over EVERY
             # candidate) re-executes once per consumer (measured 3-5x in
             # the optimized plan; exchange reuse does not cover the
-            # differently-partitioned branches). Callers inside
-            # foreachBatch must pass materialize_tier1=False —
-            # localCheckpoint there breaks the micro-batch file-sink
-            # commit (see streaming.process_batch) — and accept the cheap
-            # per-batch re-execution instead. Block release is the
+            # differently-partitioned branches). materialize_tier1=False
+            # keeps tier 1 lazy: the streaming micro-batch (which frees
+            # its caches per batch and has no checkpoint sweep) and plan
+            # audits that must not run jobs. Block release is the
             # caller's pipeline-level concern (pipeline.DedupResult
             # .release() sweeps every checkpoint created during the run).
             # eager: the survivor list has three consumers whose AQE jobs
@@ -286,27 +301,30 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             cands = cands.localCheckpoint(eager=True)
         # restrict the fat table to survivor ids BEFORE the attach joins so
         # they only move survivors' sketches instead of the whole table.
-        # No forced broadcast hint: the survivor-id set is O(true pairs)
-        # and unbounded at web scale — AQE picks broadcast vs shuffled
-        # semi-join from the measured size (autoBroadcastJoinThreshold is
-        # tuned in session.py), so small runs still get the broadcast plan
-        # without the OOM cliff a hard F.broadcast() would create.
         surv_ids = (
             cands.select(F.col("id_a").alias("doc_id"))
             .unionByName(cands.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        # SHUFFLE_HASH hint, build = the skinny survivor-id set: the
-        # checkpointed relations here are ExistingRDD scans with no size
-        # stats, so the planner (even with preferSortMergeJoin=false)
-        # falls back to SORT-merge for this semi-join and SORTS the fat
-        # 8 KB-row sketch relation — twice, once per attach side
-        # (round-6 executed-plan audit: 2x "SortMergeJoin LeftSemi" +
-        # "Sort [doc_id]" over the sketch exchange). The hint forces a
-        # shuffled-hash semi build on the id set; the fat side's
-        # doc_id exchange remains (and is reused by the attach join's
-        # partitioning requirement), the sorts disappear.
-        sk = sk.join(surv_ids.hint("shuffle_hash"), "doc_id", "left_semi")
+        if small:
+            # broadcast the id set: it is a subset of a side that already
+            # qualifies for broadcast, at 8 B per id. The fat side then
+            # streams through a map-side semi-join and only survivors'
+            # sketches reach the attach broadcast. The shuffled semi-join
+            # below would first exchange the WHOLE sketch table, once per
+            # attach side (measured at 5,000 webtext docs: 2 x 36.9 MB, 74
+            # of the run's 90 MB of shuffle).
+            sk = sk.join(F.broadcast(surv_ids), "doc_id", "left_semi")
+        else:
+            # web scale: the id set is O(true pairs) and unbounded, so no
+            # forced broadcast. SHUFFLE_HASH hint, build = the skinny id
+            # set: without it the planner picks SORT-merge for this
+            # semi-join and SORTS the fat 8 KB-row sketch relation, once
+            # per attach side (round-6 executed-plan audit: 2x
+            # "SortMergeJoin LeftSemi" + "Sort [doc_id]" over the sketch
+            # exchange). The fat side's doc_id exchange remains (and is
+            # reused by the attach join's partitioning requirement).
+            sk = sk.join(surv_ids.hint("shuffle_hash"), "doc_id", "left_semi")
 
     df = _attach(cands, sk, "id_a", "a", F.col("sketch"), small=small)
     df = _attach(df, sk, "id_b", "b", F.col("sketch"), small=small)

@@ -193,13 +193,10 @@ def test_degenerate_texts_end_to_end(spark):
         res.release()
 
 
-def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
-    """Round-6: verify_pairs broadcasts the sketch side when its size
-    ESTIMATE is provably small (parquet-backed tables carry real stats;
-    checkpointed scans never qualify). Pin output equality between the
-    two attach strategies on a parquet-backed table, and that the small
-    path actually fires there."""
-    import numpy as np
+def _small_side_parity(spark, tmp_path, prefix_filter):
+    """Rows of verify_pairs over all pairs of a small parquet-backed
+    sketch table, once on the broadcast (``small``) path and once with
+    the shuffled-hash hint path forced; returns (small, forced)."""
     from pyspark.sql import functions as F
 
     from mashspark.params import LSHParams, SketchParams
@@ -225,15 +222,67 @@ def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
     pairs = (ids.withColumnRenamed("doc_id", "id_a")
              .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
              .filter(F.col("id_a") < F.col("id_b")))
-    got = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
-                         prefix_filter=None).orderBy("id_a", "id_b").collect()
-    # force the hint path for the same inputs
+
+    def run():
+        return [tuple(r) for r in V.verify_pairs(
+            pairs, sk, sp, jaccard_threshold=0.5, prefix_filter=prefix_filter,
+        ).orderBy("id_a", "id_b").collect()]
+
+    got = run()
     orig = V._sketch_side_small
     V._sketch_side_small = lambda _sk: False
     try:
-        ref = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
-                             prefix_filter=None).orderBy("id_a", "id_b").collect()
+        ref = run()
     finally:
         V._sketch_side_small = orig
-    assert [tuple(r) for r in got] == [tuple(r) for r in ref]
+    return got, ref
+
+
+def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
+    """verify_pairs broadcasts the sketch side when it is provably small
+    (see ``_sketch_side_small``: the larger of the optimizer estimate
+    and the stored size of any checkpointed scan). Pin output equality
+    between the two attach strategies without the prefix filter."""
+    got, ref = _small_side_parity(spark, tmp_path, prefix_filter=None)
+    assert got == ref
     assert len(got) > 0
+
+
+def test_verify_broadcast_attach_matches_hint_path_with_prefix_filter(spark, tmp_path):
+    """Same parity with the two-tier prefix filter on, which is where the
+    small path restricts the fat side to tier-1 survivors through a
+    broadcast semi-join instead of the shuffled one."""
+    got, ref = _small_side_parity(spark, tmp_path, prefix_filter=64)
+    assert got == ref
+    assert len(got) > 0
+
+
+def test_checkpointed_sketch_side_sized_by_stored_bytes(spark):
+    """A checkpointed sketch table inherits its size estimate from the
+    input text plan, far below its stored size. The sizing must use the
+    stored bytes: with the broadcast threshold between the two, the
+    table must not qualify; above both, it must."""
+    from mashspark import verify as V
+    from mashspark.params import LSHParams, SketchParams
+    from mashspark.sketch import sketch_documents
+
+    jsc = spark.sparkContext._jsc
+    docs = webtext_spark_df(spark, n_base=40, seed=5).select("doc_id", "text")
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    sk = (sketch_documents(docs, SketchParams(s=128), LSHParams(prefix=64))
+          .localCheckpoint(eager=True)
+          .select("doc_id", "sketch", "card_est"))
+    (rid,) = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    stored = sum(i.memSize() + i.diskSize()
+                 for i in jsc.sc().getRDDStorageInfo() if i.id() == rid)
+    est = int(sk._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert 0 <= est < stored, (est, stored)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(max(est + 1, stored // 2)))
+        assert not V._sketch_side_small(sk)
+        spark.conf.set(key, str(stored + 1))
+        assert V._sketch_side_small(sk)
+    finally:
+        spark.conf.set(key, old)

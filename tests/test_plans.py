@@ -12,7 +12,10 @@ Each assertion names the scale behavior it guards:
 * the screen hash join broadcasts the reference index (mixture side must
   stream map-side, never shuffle on hash);
 * verify's fat-sketch joins hash, not sort-merge (8 KB binary rows must
-  not be sorted).
+  not be sorted), and on the broadcast path the sketch table is cut to
+  tier-1 survivors before it is exchanged or broadcast;
+* LSH explodes the band relation once per run, whatever the number of
+  consumers.
 """
 
 from __future__ import annotations
@@ -146,6 +149,80 @@ def test_verify_joins_hash_not_sort_merge(spark, docs_parquet):
                        prefix_filter=None)
     plan = plan_of(out, "simple")
     assert "SortMergeJoin" not in plan, plan
+
+
+def _physical_nodes(*dfs):
+    """Every node of the physical plans of ``dfs``, descending into AQE
+    wrappers, query stages and the plans of cached relations. A cached
+    relation's plan is visited once however many scans read it, and a
+    reused exchange is not descended into (it runs once)."""
+    todo = [df._jdf.queryExecution().executedPlan() for df in dfs]
+    seen_caches = set()
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        yield node
+        if name == "InMemoryTableScan":
+            rel = node.relation()
+            rid = rel.cacheBuilder().cachedColumnBuffers().id()
+            if rid not in seen_caches:
+                seen_caches.add(rid)
+                todo.append(rel.cachedPlan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+
+
+def test_verify_cuts_small_sketch_side_before_exchange(spark, docs_parquet):
+    """On the broadcast path with the prefix filter on, no exchange or
+    broadcast that carries a sketch column may sit below the tier-1
+    survivor semi-join: the sketch table must be cut to survivors
+    first, so the whole 8 KB-row table is never moved (it used to be
+    exchanged in full once per attach side before the semi-join)."""
+    from mashspark import verify as V
+
+    docs = spark.read.parquet(docs_parquet)
+    sk = sketch_documents(docs, PARAMS, LSH).localCheckpoint(eager=True)
+    assert V._sketch_side_small(sk.select("doc_id", "sketch", "card_est"))
+    ids = sk.select("doc_id")
+    cands = (
+        ids.withColumnRenamed("doc_id", "id_a")
+        .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .limit(100)
+    )
+    out = V.verify_pairs(cands, sk, PARAMS, jaccard_threshold=0.5,
+                         prefix_filter=16)
+    carrying = []
+    for node in _physical_nodes(out):
+        if "Exchange" not in node.nodeName():
+            continue
+        cols = node.output()
+        if any(cols.apply(i).name().startswith("sketch") for i in range(cols.size())):
+            carrying.append(node)
+    assert carrying, plan_of(out)
+    bad = [n.simpleString(200) for n in carrying if "LeftSemi" not in n.toString()]
+    assert not bad, (bad, plan_of(out))
+
+
+def test_candidate_pairs_explodes_bands_once(spark, docs_parquet):
+    """The band relation is exploded once and every consumer (bucket
+    aggregate, metrics, hot/cold tagging, both self-join sides) reads
+    that one copy: across the plans of the pairs and the metrics there
+    is exactly one Generate explode(band_key)."""
+    from mashspark.lsh import candidate_pairs
+
+    docs = spark.read.parquet(docs_parquet)
+    sk = sketch_documents(docs, PARAMS, LSH).localCheckpoint(eager=True)
+    pairs, metrics = candidate_pairs(sk, band_doc_cap=3)
+    gens = [n.simpleString(200) for n in _physical_nodes(pairs, metrics)
+            if n.nodeName() == "Generate" and "explode(band_key" in n.simpleString(200)]
+    assert len(gens) == 1, gens
 
 
 def test_no_cartesian_blowup_in_candidate_families(spark, docs_parquet):
